@@ -2,9 +2,9 @@
 
 The traced run enables Spark's event log (uncompressed JSON lines). Each
 completed stage becomes one record with its wall interval and the sums of
-its task metrics; each job becomes a wall interval. A stage belongs to the
-innermost span whose interval holds the stage's submission time; event-log
-times and span times both read the host's wall clock.
+its task metrics; each job becomes a wall interval. Both carry the span id
+the submitting thread was tagged with (the `SPAN_TAG` local property), and
+a stage belongs to that span.
 """
 
 from __future__ import annotations
@@ -14,6 +14,7 @@ import json
 import os
 import statistics
 
+SPAN_TAG = "perfbench.span"
 # SQL metrics of the Arrow Python UDF node, in milliseconds
 _PY_RUN = "time to run Python workers"
 _PY_START = "time to start Python workers"
@@ -23,6 +24,7 @@ _PY_INIT = "time to initialize Python workers"
 def _new_stage(sid: int) -> dict:
     return {
         "id": sid,
+        "span": None,
         "submit": None,
         "complete": None,
         "tasks": [],  # task wall seconds (finish - launch)
@@ -41,10 +43,15 @@ def _new_stage(sid: int) -> dict:
     }
 
 
+def _span_tag(ev: dict) -> int | None:
+    tag = (ev.get("Properties") or {}).get(SPAN_TAG)
+    return None if tag is None else int(tag)
+
+
 def parse_events(lines) -> tuple[dict[int, dict], list[dict]]:
     """Event-log JSON lines → (stage id → stage record, job intervals).
 
-    Only stages that completed are kept; times are in seconds."""
+    Only stages and jobs that completed are kept; times are in seconds."""
     stages: dict[int, dict] = {}
     jobs: dict[int, dict] = {}
     for line in lines:
@@ -73,19 +80,31 @@ def parse_events(lines) -> tuple[dict[int, dict], list[dict]]:
             )
             st["input_bytes"] += (m.get("Input Metrics") or {}).get("Bytes Read", 0)
             st["output_records"] += (m.get("Output Metrics") or {}).get("Records Written", 0)
-            for acc in info.get("Accumulables") or []:
-                name, upd = acc.get("Name"), acc.get("Update")
-                if name == _PY_RUN:
-                    st["python_run_s"] += float(upd) / 1000
-                elif name in (_PY_START, _PY_INIT):
-                    st["python_start_s"] += float(upd) / 1000
+            py = {
+                acc.get("Name"): float(acc.get("Update")) / 1000
+                for acc in info.get("Accumulables") or []
+                if acc.get("Name") in (_PY_RUN, _PY_START, _PY_INIT)
+            }
+            st["python_run_s"] += py.get(_PY_RUN, 0.0)
+            # A task on a reused worker repeats that worker's initialize
+            # time without a start time; only a task that started its worker
+            # paid for either.
+            if _PY_START in py:
+                st["python_start_s"] += py[_PY_START] + py.get(_PY_INIT, 0.0)
+        elif kind == "SparkListenerStageSubmitted":
+            sid = ev["Stage Info"]["Stage ID"]
+            stages.setdefault(sid, _new_stage(sid))["span"] = _span_tag(ev)
         elif kind == "SparkListenerStageCompleted":
             si = ev["Stage Info"]
             st = stages.setdefault(si["Stage ID"], _new_stage(si["Stage ID"]))
             st["submit"] = si.get("Submission Time", 0) / 1000
             st["complete"] = si.get("Completion Time", 0) / 1000
         elif kind == "SparkListenerJobStart":
-            jobs[ev["Job ID"]] = {"id": ev["Job ID"], "start": ev["Submission Time"] / 1000}
+            jobs[ev["Job ID"]] = {
+                "id": ev["Job ID"],
+                "span": _span_tag(ev),
+                "start": ev["Submission Time"] / 1000,
+            }
         elif kind == "SparkListenerJobEnd" and ev["Job ID"] in jobs:
             jobs[ev["Job ID"]]["end"] = ev["Completion Time"] / 1000
     done = {sid: st for sid, st in stages.items() if st["complete"] is not None}
@@ -108,17 +127,11 @@ def read_event_log(log_dir: str) -> tuple[dict[int, dict], list[dict]]:
 
 
 def attribute(stages: dict[int, dict], spans: list[dict]) -> dict[int, list[dict]]:
-    """Span id → the stages whose submission falls inside it, innermost span
-    winning. Stages outside every span are dropped."""
+    """Span id → the stages tagged with it. Untagged stages are dropped."""
     out: dict[int, list[dict]] = {s["id"]: [] for s in spans}
     for st in sorted(stages.values(), key=lambda s: s["id"]):
-        best = None
-        for sp in spans:
-            if sp["start"] <= st["submit"] <= sp["end"]:
-                if best is None or sp["start"] >= best["start"]:
-                    best = sp
-        if best is not None:
-            out[best["id"]].append(st)
+        if st["span"] in out:
+            out[st["span"]].append(st)
     return out
 
 

@@ -3,7 +3,7 @@ event log attributes to them, and the engine's result counters."""
 
 from __future__ import annotations
 
-from .eventlog import task_skew
+from .eventlog import attribute, task_skew
 from .tracing import clip, descendants, self_times, union_length
 
 
@@ -15,9 +15,10 @@ def _wall(stage: dict) -> float:
     return stage["complete"] - stage["submit"]
 
 
-def round_layers(spans, by_span, jobs, rnd: dict) -> tuple[dict, dict]:
+def round_layers(spans, stages, jobs, rnd: dict) -> tuple[dict, dict]:
     """(metric name → value, diagnostics) for the round whose root span is
-    `rnd["span"]`. `by_span` maps span id → attributed stages."""
+    `rnd["span"]`, from every span, stage (id → record) and job of the run."""
+    by_span = attribute(stages, spans)
     sub = descendants(spans, rnd["span"])
     selfs = self_times(spans)
 
@@ -46,8 +47,9 @@ def round_layers(spans, by_span, jobs, rnd: dict) -> tuple[dict, dict]:
     keys_out = rnd.get("keys_out") or sum(st["output_records"] for st in python)
     compact = stages_under(named("lake.compact"))
 
-    def shuffle_bytes(name):
-        return sum(st["shuffle_write_bytes"] for st in stages_under(named(name)))
+    def shuffle_bytes_per_read(name):
+        reads = named(name)
+        return sum(st["shuffle_write_bytes"] for st in stages_under(reads)) / max(1, len(reads))
 
     metrics = {
         "planner.plan_s": sum(_dur(s) for s in named("planner.plan")),
@@ -74,22 +76,44 @@ def round_layers(spans, by_span, jobs, rnd: dict) -> tuple[dict, dict]:
         "jvm.gc_s": sum(st["gc_s"] for st in round_stages),
         "lake.compact.exchanges": sum(1 for st in compact if st["shuffle_write_bytes"] > 0),
         "lake.compact.shuffle_bytes": sum(st["shuffle_write_bytes"] for st in compact),
-        "lake.read.scan_shuffle_bytes": shuffle_bytes("read.scan") / max(1, len(named("read.scan"))),
+        "lake.read.scan_shuffle_bytes": shuffle_bytes_per_read("read.scan"),
         "lake.read.lookup_input_bytes": sum(
             st["input_bytes"] for st in stages_under(named("read.lookup"))
         ),
-        "lake.changes.shuffle_bytes": shuffle_bytes("read.changes"),
+        "lake.changes.shuffle_bytes": shuffle_bytes_per_read("read.changes"),
         "dedup.rows_in": rows_in,
         "dedup.keys_out": keys_out,
         "dedup.keep_ratio": keys_out / rows_in if rows_in else 0.0,
     }
-    # Layer self times of each batch must add up to the batch span: the
-    # check that no layer time is lost or counted twice.
-    coverage = []
-    for b in batches:
-        parts = sum(selfs[d["id"]] for d in descendants(spans, b["id"]))
-        coverage.append(abs(parts - _dur(b)) / _dur(b) if _dur(b) else 0.0)
-    return metrics, {"batch_coverage_residual": coverage}
+    return metrics, {"batch_coverage": [batch_coverage(spans, stages, jobs, b) for b in batches]}
+
+
+def batch_coverage(spans, stages: dict[int, dict], jobs, batch: dict) -> dict:
+    """Checks one batch's layer times against its span from two sources that
+    do not depend on each other: the Spark layers' time is the union of the
+    jobs tagged with the batch or a span below it (attribution by thread
+    tag, JVM clock); the driver layers' time (engine, merge and state-store
+    code between jobs) is the part of the span that no job in the event log
+    overlaps (attribution by time). Their sum misses the span when a job is
+    tagged to the wrong span, carries no tag, or runs outside the span it is
+    tagged with. `stray_stages` lists the stages submitted inside the span but
+    not tagged to it or below it."""
+    under = {d["id"] for d in descendants(spans, batch["id"])}
+    start, end = batch["start"], batch["end"]
+    spark_s = union_length((j["start"], j["end"]) for j in jobs if j["span"] in under)
+    driver_s = _dur(batch) - union_length(clip([(j["start"], j["end"]) for j in jobs], start, end))
+    stray = [
+        st["id"]
+        for st in stages.values()
+        if start <= st["submit"] <= end and st["span"] not in under
+    ]
+    return {
+        "batch_s": _dur(batch),
+        "spark_s": spark_s,
+        "driver_s": driver_s,
+        "residual": abs(spark_s + driver_s - _dur(batch)) / _dur(batch) if _dur(batch) else 0.0,
+        "stray_stages": stray,
+    }
 
 
 def span_report(spans, by_span) -> list[dict]:

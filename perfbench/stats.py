@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 import os
+import time
 
 
 def percentile(values, q: float) -> float:
@@ -32,37 +33,84 @@ def load_average_1m() -> float:
     return os.getloadavg()[0]
 
 
-def _proc_stats() -> dict[int, tuple[int, float]]:
-    """pid → (parent pid, user+system CPU seconds of the process and of its
-    reaped children) for every process in /proc."""
-    tick = os.sysconf("SC_CLK_TCK")
+# HotSpot's JIT compiler threads, as /proc shows their names (15 characters)
+JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
+
+
+def _stat_fields(path: str) -> list[str]:
+    """The fields of a /proc stat file after the command name."""
+    with open(path) as f:
+        raw = f.read()
+    return raw[raw.rindex(")") + 2 :].split()
+
+
+def _proc_stats() -> dict[int, tuple[int, list[str]]]:
+    """pid → (parent pid, stat fields) for every process in /proc."""
     out = {}
     for name in os.listdir("/proc"):
         if not name.isdigit():
             continue
         try:
-            with open(f"/proc/{name}/stat") as f:
-                raw = f.read()
+            fields = _stat_fields(f"/proc/{name}/stat")
         except OSError:  # the process ended while we listed /proc
             continue
-        fields = raw[raw.rindex(")") + 2 :].split()
-        # fields[1] = ppid; [11..14] = utime, stime, cutime, cstime
-        out[int(name)] = (int(fields[1]), sum(int(x) for x in fields[11:15]) / tick)
+        out[int(name)] = (int(fields[1]), fields)
     return out
 
 
-def tree_cpu_seconds(root: int | None = None) -> float:
-    """CPU seconds used so far by `root` (default: this process) and every
-    process below it — the driver, the JVM and the Python workers."""
-    procs = _proc_stats()
-    root = os.getpid() if root is None else root
-    kids: dict[int, list[int]] = {}
-    for pid, (ppid, _) in procs.items():
-        kids.setdefault(ppid, []).append(pid)
-    total, todo = 0.0, [root]
-    while todo:
-        pid = todo.pop()
-        if pid in procs:
-            total += procs[pid][1]
-            todo.extend(kids.get(pid, []))
-    return total
+def _process_cpu(pid: int, fields: list[str]) -> float:
+    """CPU seconds of a process and of its reaped children. /proc counts in
+    10 ms ticks; the process's own CPU clock counts in nanoseconds, which
+    matters for a 0.1 s lookup, so it is read where the kernel allows."""
+    tick = os.sysconf("SC_CLK_TCK")
+    try:
+        own = time.clock_gettime((~pid << 3) | 2)  # the process's CPUCLOCK_SCHED
+    except OSError:
+        own = (int(fields[11]) + int(fields[12])) / tick  # utime + stime
+    return own + (int(fields[13]) + int(fields[14])) / tick  # + cutime + cstime
+
+
+class TreeCpu:
+    """CPU seconds used so far by this process and every process below it
+    (the driver, the JVM and the Python workers), and the part of them the
+    JVM's JIT compiler threads used.
+
+    A JIT thread's time is its last reading: HotSpot stops idle compiler
+    threads, and a stopped thread's time stays in its process's total."""
+
+    def __init__(self):
+        self._names: dict[tuple[int, str], str] = {}  # (pid, tid) → thread name
+        self._jit: dict[tuple[int, str], float] = {}  # (pid, tid) → CPU seconds
+
+    def read(self) -> tuple[float, float]:
+        """(CPU seconds of the tree, of which JIT compiler threads)."""
+        procs = _proc_stats()
+        kids: dict[int, list[int]] = {}
+        for pid, (ppid, _) in procs.items():
+            kids.setdefault(ppid, []).append(pid)
+        total, todo = 0.0, [os.getpid()]
+        while todo:
+            pid = todo.pop()
+            if pid in procs:
+                total += _process_cpu(pid, procs[pid][1])
+                todo.extend(kids.get(pid, []))
+                self._read_jit(pid)
+        return total, sum(self._jit.values())
+
+    def _read_jit(self, pid: int) -> None:
+        try:
+            tids = os.listdir(f"/proc/{pid}/task")
+        except OSError:
+            return
+        tick = os.sysconf("SC_CLK_TCK")
+        for tid in tids:
+            key = (pid, tid)
+            try:
+                if key not in self._names:
+                    with open(f"/proc/{pid}/task/{tid}/comm") as f:
+                        self._names[key] = f.read().strip()
+                if self._names[key].startswith(JIT_THREADS):
+                    fields = _stat_fields(f"/proc/{pid}/task/{tid}/stat")
+                    self._jit[key] = (int(fields[11]) + int(fields[12])) / tick
+            except OSError:  # the thread ended while we listed it
+                continue

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -14,9 +15,10 @@ import pytest
 
 from perfbench import oracle
 from perfbench.eventlog import attribute, parse_events, read_event_log, task_skew
-from perfbench.layers import round_layers
+from perfbench.layers import batch_coverage, round_layers
 from perfbench.stats import percentile
 from perfbench.tracing import Tracer, TracedTable, clip, self_times, union_length
+from perfbench.workloads import Checks, OpFailed
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "eventlog_small.jsonl")
 
@@ -84,12 +86,22 @@ def test_tracer_nests_and_proxy_records_fold():
     assert all(s["end"] > s["start"] for s in tr.spans)
 
 
+def test_tracer_tags_the_open_span_and_restores_the_parent():
+    tags = []
+    tr = Tracer(tag=tags.append)
+    with tr.span("apply"):
+        with tr.span("engine.batch"):
+            pass
+    assert tags == [0, 1, 0, None]
+    assert 0 < tr.own_s < tr.spans[0]["end"] - tr.spans[0]["start"]
+
+
 def test_disabled_tracer_records_nothing():
     tr = Tracer(enabled=False)
     with tr.span("x"):
         pass
     assert tr.wrap("y", lambda: 5)() == 5
-    assert tr.spans == []
+    assert tr.spans == [] and tr.own_s == 0
 
 
 # --------------------------------------------------------------- event log
@@ -105,10 +117,17 @@ def test_parse_recorded_event_log():
     py = [st for st in stages.values() if st["python_run_s"] > 0]
     assert py and all(st["shuffle_read_bytes"] > 0 for st in py)
     assert all(j["end"] >= j["start"] for j in jobs)
+    # every stage and job carries the span tag of the thread that ran it
+    assert all(st["span"] is not None for st in stages.values())
+    assert all(j["span"] is not None for j in jobs)
 
 
-def _task_end(stage, launch, finish, run_ms=10, py_ms=None, write=0):
-    acc = [] if py_ms is None else [{"Name": "time to run Python workers", "Update": str(py_ms)}]
+def _task_end(stage, launch, finish, run_ms=10, py_ms=None, write=0, start_ms=None, init_ms=None):
+    acc = [
+        {"Name": f"time to {what} Python workers", "Update": str(ms)}
+        for what, ms in (("run", py_ms), ("start", start_ms), ("initialize", init_ms))
+        if ms is not None
+    ]
     return (
         '{"Event":"SparkListenerTaskEnd","Stage ID":%d,"Task Info":{"Launch Time":%d,'
         '"Finish Time":%d,"Failed":false,"Killed":false,"Accumulables":%s},'
@@ -127,9 +146,12 @@ def _stage_done(stage, submit, complete):
 
 def test_parse_sums_tasks_and_drops_unfinished_stages():
     lines = [
-        '{"Event":"SparkListenerJobStart","Job ID":0,"Submission Time":1000}',
-        _task_end(0, 1000, 1100, run_ms=100, write=50),
-        _task_end(0, 1000, 1400, run_ms=400, write=70),
+        '{"Event":"SparkListenerJobStart","Job ID":0,"Submission Time":1000,'
+        '"Properties":{"perfbench.span":"7"}}',
+        '{"Event":"SparkListenerStageSubmitted","Stage Info":{"Stage ID":0},'
+        '"Properties":{"perfbench.span":"7","spark.job.description":"x"}}',
+        _task_end(0, 1000, 1100, run_ms=100, write=50, py_ms=60, start_ms=20, init_ms=10),
+        _task_end(0, 1000, 1400, run_ms=400, write=70, py_ms=90, init_ms=300),  # reused worker
         _stage_done(0, 1000, 1500),
         _task_end(1, 1500, 1600, py_ms=80),  # stage 1 never completes
         '{"Event":"SparkListenerJobEnd","Job ID":0,"Completion Time":1700}',
@@ -137,27 +159,32 @@ def test_parse_sums_tasks_and_drops_unfinished_stages():
     stages, jobs = parse_events(lines)
     assert list(stages) == [0]
     st = stages[0]
+    assert st["span"] == 7
     assert st["run_s"] == pytest.approx(0.5)
     assert st["shuffle_write_bytes"] == 120
+    assert st["python_run_s"] == pytest.approx(0.15)
+    assert st["python_start_s"] == pytest.approx(0.03)
     assert st["tasks"] == [pytest.approx(0.1), pytest.approx(0.4)]
-    assert jobs == [{"id": 0, "start": 1.0, "end": 1.7}]
+    assert jobs == [{"id": 0, "span": 7, "start": 1.0, "end": 1.7}]
     assert task_skew([st]) == pytest.approx(0.4 / 0.25)
 
 
-def test_stage_goes_to_innermost_span():
+def test_stage_goes_to_the_span_it_is_tagged_with():
     spans = [
         _span(0, "round", None, 0.0, 100.0),
         _span(1, "engine.batch", 0, 10.0, 50.0),
         _span(2, "lake.merge", 1, 20.0, 40.0),
     ]
+    # the tag wins over the time: stage 1 ran inside the merge span's
+    # interval but was tagged with the batch
     stages = {
-        i: {"id": i, "submit": t, "complete": t + 1}
-        for i, t in enumerate([5.0, 15.0, 25.0, 200.0])
+        i: {"id": i, "span": tag, "submit": t, "complete": t + 1}
+        for i, (tag, t) in enumerate([(0, 5.0), (1, 25.0), (2, 25.0), (None, 30.0), (9, 31.0)])
     }
     by = attribute(stages, spans)
     assert [s["id"] for s in by[0]] == [0]
     assert [s["id"] for s in by[1]] == [1]
-    assert [s["id"] for s in by[2]] == [2]  # stage 3 lies outside every span
+    assert [s["id"] for s in by[2]] == [2]  # 3 is untagged, 9 is no span here
 
 
 def test_round_layers_split_batch_time_and_cover_it():
@@ -175,13 +202,13 @@ def test_round_layers_split_batch_time_and_cover_it():
         "python_run_s": 0.0, "python_start_s": 0.0, **kw,
     }
     stages = {
-        0: mk(0, 21.0, shuffle_write_bytes=100, shuffle_write_records=10),
-        1: mk(1, 30.0, shuffle_read_bytes=100, python_run_s=4.0, output_records=8),
-        2: mk(2, 61.0, shuffle_write_bytes=30),
+        0: mk(0, 21.0, span=2, shuffle_write_bytes=100, shuffle_write_records=10),
+        1: mk(1, 30.0, span=2, shuffle_read_bytes=100, python_run_s=4.0, output_records=8),
+        2: mk(2, 61.0, span=4, shuffle_write_bytes=30),
     }
-    jobs = [{"id": 0, "start": 21.0, "end": 35.0}]
+    jobs = [{"id": 0, "span": 2, "start": 21.0, "end": 35.0}]
     rnd = {"span": 0, "rows_in": 10, "progress": [(1500, 1000)]}
-    m, diag = round_layers(spans, attribute(stages, spans), jobs, rnd)
+    m, diag = round_layers(spans, stages, jobs, rnd)
     assert m["engine.batch_s"] == 40.0
     assert m["engine.self_s"] == pytest.approx(40 - 20 - 1)
     assert m["lake.merge_s"] == 20.0 and m["lake.fold_commit_s"] == 20.0
@@ -195,7 +222,55 @@ def test_round_layers_split_batch_time_and_cover_it():
     assert m["lake.compact.exchanges"] == 1 and m["lake.compact.shuffle_bytes"] == 30
     assert m["streaming.trigger_overhead_s"] == 0.5
     assert m["jvm.cpu_s"] == 3.0
-    assert diag["batch_coverage_residual"] == [pytest.approx(0.0)]
+    (cov,) = diag["batch_coverage"]
+    assert cov["spark_s"] == 14.0 and cov["driver_s"] == 26.0
+    assert cov["residual"] == 0.0 and cov["stray_stages"] == []
+
+
+def test_batch_coverage_catches_jobs_on_the_wrong_span():
+    spans = [
+        _span(0, "engine.batch", None, 10.0, 50.0),
+        _span(1, "lake.merge", 0, 20.0, 40.0),
+        _span(2, "lake.compact", None, 60.0, 70.0),
+    ]
+    stage = lambda i, span, sub: {"id": i, "span": span, "submit": sub}  # noqa: E731
+    job = lambda i, span, a, b: {"id": i, "span": span, "start": a, "end": b}  # noqa: E731
+    good = [job(0, 1, 21.0, 35.0), job(1, 0, 12.0, 16.0), job(2, 2, 61.0, 65.0)]
+    ok = batch_coverage(spans, {0: stage(0, 1, 21.0)}, good, spans[0])
+    assert ok["residual"] == 0.0 and ok["stray_stages"] == []
+    # a job that ran inside the batch but is tagged with a later span, or
+    # with none, is missing from the Spark layers
+    for tag in (2, None):
+        jobs = good[:1] + [job(1, tag, 12.0, 16.0)]
+        cov = batch_coverage(spans, {5: stage(5, tag, 12.0)}, jobs, spans[0])
+        assert cov["residual"] == pytest.approx(4 / 40)
+        assert cov["stray_stages"] == [5]
+    # a job tagged with the batch that ran outside it is counted twice over
+    late = good + [job(3, 1, 55.0, 59.0)]
+    assert batch_coverage(spans, {}, late, spans[0])["residual"] == pytest.approx(4 / 40)
+
+
+# ------------------------------------------------------------ failure counts
+def test_a_failed_operation_counts_once():
+    from perfbench.run import measure
+
+    class Failing:
+        def __init__(self, raise_from_op):
+            self.checks = Checks(lambda msg: None)
+            self.raise_from_op = raise_from_op
+
+        def round(self, tracer):
+            self.checks.check(True, "a check before the failure")
+            if self.raise_from_op:
+                return self.checks.op(lambda: 1 / 0)
+            raise RuntimeError("outside any operation")
+
+    for raise_from_op in (True, False):
+        w = Failing(raise_from_op)
+        assert measure(w, Tracer(enabled=False), 0) == []
+        assert (w.checks.attempted, w.checks.failed) == (2, 1)
+    with pytest.raises(OpFailed):
+        Checks(lambda msg: None).op(lambda: 1 / 0)
 
 
 # ------------------------------------------------------------------- oracle
@@ -246,3 +321,25 @@ def test_digest_ignores_order_and_sees_every_field():
     assert oracle.digest(reversed(rows)) == (n, d)
     assert oracle.digest([("a", 1, 2), ("b", 3, 4), ("c", 5, 7)]) != (n, d)
     assert oracle.digest([("a", 1, 2), ("b", 3, 4)])[0] == 2
+
+
+# ---------------------------------------------------------------- CPU clock
+def test_tree_cpu_counts_this_process_and_a_child():
+    import subprocess
+    import sys
+
+    from perfbench.stats import TreeCpu
+
+    cpu = TreeCpu()
+    total0, jit0 = cpu.read()
+    child = subprocess.Popen(
+        [sys.executable, "-c", "import time\nt = time.process_time()\nwhile time.process_time() - t < 0.3: pass\ntime.sleep(5)"]
+    )
+    try:
+        time.sleep(1.0)
+        total1, jit1 = cpu.read()
+    finally:
+        child.kill()
+        child.wait()
+    assert total1 - total0 >= 0.25  # the child's busy loop, read while it lives
+    assert jit0 == jit1 == 0  # no JVM in this tree

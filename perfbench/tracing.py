@@ -9,6 +9,12 @@ The benchmark drives one operation at a time: the streaming tail calls its
 `foreachBatch` body on another thread, but only while the main thread is
 blocked in `awaitTermination`. One shared stack (guarded by a lock) therefore
 gives every span the right parent.
+
+A tracer given a `tag` callback calls it with a span's id when the span opens
+and with its parent's id when it closes, on the thread that opened it. The
+traced run uses it to set a Spark local property, which the event log
+records on every job and stage that thread submits: stages are attributed
+to spans by that tag, not by time.
 """
 
 from __future__ import annotations
@@ -21,9 +27,11 @@ import time
 class Tracer:
     """Collects spans; a disabled tracer records nothing and costs one call."""
 
-    def __init__(self, enabled: bool = True, clock=time.time):
+    def __init__(self, enabled: bool = True, clock=time.time, tag=None):
         self.enabled = enabled
         self.clock = clock
+        self.tag = tag
+        self.own_s = 0.0  # seconds spent in the tracer: bookkeeping and tag calls
         self.spans: list[dict] = []
         self._stack: list[int] = []
         self._lock = threading.Lock()
@@ -33,6 +41,7 @@ class Tracer:
         if not self.enabled:
             yield {"attrs": {}}
             return
+        entered = time.perf_counter()
         with self._lock:
             rec = {
                 "id": len(self.spans),
@@ -44,12 +53,19 @@ class Tracer:
             }
             self.spans.append(rec)
             self._stack.append(rec["id"])
+        if self.tag:
+            self.tag(rec["id"])
+        enter_s = time.perf_counter() - entered
         try:
             yield rec
         finally:
+            leaving = time.perf_counter()
+            if self.tag:
+                self.tag(rec["parent"])
             with self._lock:
                 rec["end"] = self.clock()
                 self._stack.remove(rec["id"])
+                self.own_s += enter_s + time.perf_counter() - leaving
 
     def wrap(self, name: str, fn):
         """`fn` with every call inside a span called `name`."""

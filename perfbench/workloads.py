@@ -4,12 +4,14 @@ correctness checks, driven only through the engine's public API.
 `bulk_replay` applies a whole changelog in two delta commits to a fresh
 table. `trickle_ingest` preloads a table and feeds the changelog's tail
 through the streaming tail, one small file per micro-batch. Both rounds then
-scan the table, read the net changes of the round's commits, compact, and
-make point lookups, so every end-to-end metric exists on both workloads.
+scan the table, read the net changes of the round's commits, make point
+lookups and compact (bulk looks up after the compaction), so every
+end-to-end metric exists on both workloads.
 """
 
 from __future__ import annotations
 
+import inspect
 import os
 import random
 import shutil
@@ -28,7 +30,7 @@ from gobblin_spark.state import StateStore
 from gobblin_spark.streaming import tail_changelog
 
 from . import oracle
-from .stats import tree_cpu_seconds
+from .stats import TreeCpu
 from .tracing import TracedStateStore, TracedTable
 
 SCHEMA = T.StructType(
@@ -42,52 +44,57 @@ SCHEMA = T.StructType(
     ]
 )
 LOG_PARTITIONS = 32
+APPLY_BATCHES = 2  # bulk: delta commits per round
 LOOKUPS = 40  # p75 is the highest percentile with ten samples beyond it
-SCANS = 3
+READ_REPEATS = 3  # timed scans and net-changes reads per round; the median counts
 TEXT_SAMPLE = 1000
 WARM_EVENTS = 2000  # one small apply per set-up
 WARM_BUCKETS = 4  # one reduce task per core: spawns every Python worker
-WARM_LOOKUPS = 10
+WARM_LOOKUPS = 5  # untimed, before the timed ones
 SERIES_SAMPLE = 10_000
+SERIES_REPEATS = 3
 
 
 @dataclass(frozen=True)
 class Spec:
     name: str
     n_events: int
-    apply_batches: int = 2  # bulk: delta commits per round
     preload_frac: float = 0.0  # trickle: share of each log partition preloaded
     tail_files: int = 0  # trickle: micro-batches per round
-    max_generations: int = 8
+    max_generations: int | None = None  # trickle: the preloaded table's
     n_buckets: int = 32
+    # the point lookups read the compacted table (per-file key ranges)
+    # rather than the generations the commits left (merge-on-read)
+    lookups_compacted: bool = False
 
-    @property
-    def generator(self) -> dict:
-        """`synth_changelog`'s parameters (its defaults but the event and
-        partition counts)."""
-        return {
-            "n_events": self.n_events,
-            "n_urls": max(1, self.n_events // 4),
-            "hot_fraction_pct": 20,
-            "n_hot": 3,
-            "n_partitions": LOG_PARTITIONS,
-        }
+    def generator(self, seed: int) -> dict:
+        """Every `synth_changelog` argument but the session, its defaults
+        included: the call `prepare` makes and provenance records."""
+        args = inspect.signature(synth_changelog).bind(
+            None, n_events=self.n_events, n_partitions=LOG_PARTITIONS, seed=seed
+        )
+        args.apply_defaults()
+        return {k: v for k, v in args.arguments.items() if k != "spark"}
 
 
 SPECS = {
     s.name: s
     for s in (
-        Spec("bulk_replay", n_events=48_000),
+        Spec("bulk_replay", n_events=48_000, lookups_compacted=True),
         Spec(
             "trickle_ingest",
             n_events=16_000,
             n_buckets=16,
             preload_frac=0.8,
-            tail_files=4,
-            max_generations=3,
+            tail_files=3,
+            max_generations=2,
         ),
     )
 }
+
+
+class OpFailed(Exception):
+    """An engine operation raised; `Checks.op` has counted it already."""
 
 
 class Checks:
@@ -105,28 +112,18 @@ class Checks:
             self.log(f"check failed: {what}")
 
     def op(self, fn, *args, **kwargs):
-        """Run one engine operation; count it, and re-raise its error after
-        counting so the round is abandoned."""
+        """Run one engine operation and count it; its error is counted and
+        re-raised as `OpFailed`, so the round is abandoned."""
         self.attempted += 1
         try:
             return fn(*args, **kwargs)
-        except Exception:
+        except Exception as exc:
             self.failed += 1
-            raise
+            raise OpFailed(repr(exc)) from exc
 
 
 def _ts_us(dt) -> int:
     return int(dt.timestamp()) * 1_000_000 + dt.microsecond
-
-
-def _mark() -> tuple[float, float]:
-    return time.perf_counter(), tree_cpu_seconds()
-
-
-def _since(mark) -> tuple[float, float]:
-    """(wall seconds, CPU seconds) since `mark`."""
-    wall, cpu = _mark()
-    return wall - mark[0], cpu - mark[1]
 
 
 def _noop_scan(df) -> None:
@@ -134,12 +131,13 @@ def _noop_scan(df) -> None:
 
 
 class Workload:
-    def __init__(self, spark, spec: Spec, seed: int, work: str, checks: Checks):
+    def __init__(self, spark, spec: Spec, seed: int, work: str, checks: Checks, cpu: TreeCpu):
         self.spark = spark
         self.spec = spec
         self.seed = seed
         self.work = work
         self.checks = checks
+        self.cpu = cpu
         self._tables = 0
 
     # ------------------------------------------------------------- inputs
@@ -150,16 +148,14 @@ class Workload:
         t0 = time.perf_counter()
         self.changelog_path = os.path.join(self.work, "changelog")
         write_changelog(
-            synth_changelog(spark, spec.n_events, n_partitions=LOG_PARTITIONS, seed=self.seed),
+            synth_changelog(spark, **spec.generator(self.seed)),
             self.changelog_path,
         )
         if spec.tail_files:
             self._split()
-            self.warm_path = self.prefix_path
             sources = [self.prefix_path, self.tail_path]
             before = oracle.visible(oracle.lww_winners([self.prefix_path]))
         else:
-            self.warm_path = self.changelog_path
             sources = [self.changelog_path]
             before = {}
         self.checks.log(f"inputs written {time.perf_counter() - t0:.1f}s")
@@ -194,11 +190,15 @@ class Workload:
         """Split each log partition at `preload_frac` of its offsets: the head
         becomes a hive-partitioned changelog, the tail `tail_files` flat
         parquet files (one offset slice of every partition each), with
-        increasing modification times so the file stream reads them in order."""
+        increasing modification times so the file stream reads them in order.
+        The warm-up streams one more flat file: the first `WARM_EVENTS`
+        offsets of the log."""
         spec = self.spec
         self.prefix_path = os.path.join(self.work, "prefix")
         self.tail_path = os.path.join(self.work, "tail")
+        self.warm_tail_path = os.path.join(self.work, "warm_tail")
         os.makedirs(self.tail_path)
+        os.makedirs(self.warm_tail_path)
         con = oracle.duckdb.connect()
         con.execute(
             f"""
@@ -217,6 +217,10 @@ class Workload:
             FROM cl JOIN cut USING (log_partition);
             COPY (SELECT * EXCLUDE (slice) FROM part WHERE slice < 0)
             TO '{self.prefix_path}' (FORMAT parquet, PARTITION_BY (log_partition));
+            COPY (SELECT * EXCLUDE (slice) FROM part
+                  WHERE log_offset < {WARM_EVENTS // LOG_PARTITIONS}
+                  ORDER BY log_partition, log_offset)
+            TO '{self.warm_tail_path}/part-0000.parquet' (FORMAT parquet);
             """
         )
         mtime = time.time() - 3600
@@ -251,29 +255,38 @@ class Workload:
         self._tables += 1
         return os.path.join(self.work, f"{tag}{self._tables:03d}")
 
+    def _mark(self) -> tuple[float, float]:
+        """(wall seconds, CPU seconds of the process tree but its JIT compiler
+        threads). Compiles land in whichever operation runs while they do:
+        they were half of a read's CPU and most of its spread from run to
+        run, so an operation's CPU leaves them out."""
+        total, jit = self.cpu.read()
+        return time.perf_counter(), total - jit
+
+    def _since(self, mark) -> tuple[float, float]:
+        """(wall seconds, CPU seconds) since `mark`."""
+        wall, cpu = self._mark()
+        return wall - mark[0], cpu - mark[1]
+
     # ------------------------------------------------------------ warm-up
     def warm(self) -> SnapshotTable:
-        """The set-up warm-up: apply the first `WARM_EVENTS` offsets of the
-        workload's changelog to a fresh table and read it back."""
-        table = SnapshotTable.create(
-            self.spark, self._fresh_dir("warm"), SCHEMA, key="url", n_buckets=WARM_BUCKETS
-        )
-        engine = CdcEngine(self.spark, table, job_id="warm", merge_mode="delta")
-        changelog = self.spark.read.parquet(self.warm_path)
-        first = engine.plan(changelog, WARM_EVENTS, source_path=self.warm_path)[0]
-        engine.apply_batch(changelog, first)
+        """The set-up warm-up: apply about the first `WARM_EVENTS` offsets of
+        the changelog to a fresh table the way the round applies (bulk: plan
+        and `apply_batch`; trickle: one streaming micro-batch), and read it
+        back."""
+        root = self._fresh_dir("warm")
+        table = SnapshotTable.create(self.spark, root, SCHEMA, key="url", n_buckets=WARM_BUCKETS)
+        engine = self._engine(table, root, None, "warm")
+        if self.spec.tail_files:
+            tail_changelog(
+                engine, self.warm_tail_path, root + "_checkpoint", available_now=True
+            ).awaitTermination()
+        else:
+            changelog = self.spark.read.parquet(self.changelog_path)
+            first = engine.plan(changelog, WARM_EVENTS, source_path=self.changelog_path)[0]
+            engine.apply_batch(changelog, first)
         table.read().count()
         return table
-
-    def warm_reads(self, table) -> None:
-        """Run the round's read operations once, untimed, so their code is
-        compiled before the measured round reads."""
-        _noop_scan(table.read())
-        table.changes_between(0, table.version).groupBy("_change_type").count().collect()
-        table.compact()
-        # without these, lookup CPU fell by a third over a run's first lookups
-        for row in table.read().select("url").limit(WARM_LOOKUPS).collect():
-            table.read(key_equals=row[0]).collect()
 
     def html_sample(self) -> list:
         """The first `SERIES_SAMPLE` non-null html payloads in log order."""
@@ -281,7 +294,7 @@ class Workload:
         return [
             r[0]
             for r in con.execute(
-                f"SELECT html FROM {oracle.source([self.warm_path])} WHERE html IS NOT NULL "
+                f"SELECT html FROM {oracle.source([self.changelog_path])} WHERE html IS NOT NULL "
                 f"ORDER BY log_partition, log_offset LIMIT {SERIES_SAMPLE}"
             ).fetchall()
         ]
@@ -301,42 +314,54 @@ class Workload:
             else:
                 table = self._bulk_apply(tracer, out)
             v0, v1 = out["v0"], table.version
-            # the visible scan and the net changes read the table as the
-            # commits left it (merge-on-read over several generations); the
-            # point lookups read it compacted, with per-file key ranges
-            # the first scan also pays for the CPU the apply left running
-            # (JIT compiles, GC); the median of three reads past it
-            scans = []
-            for _ in range(SCANS):
-                with tracer.span("read.scan"):
-                    m = _mark()
-                    checks.op(_noop_scan, table.read())
-                    scans.append(_since(m))
-            out["scan"] = tuple(statistics.median(x) for x in zip(*scans))
-            with tracer.span("read.changes"):
-                m = _mark()
-                changes = checks.op(
-                    lambda: table.changes_between(v0, v1).groupBy("_change_type").count().collect()
-                )
-                out["changes"] = _since(m)
+
+            def changes_by_type():
+                return table.changes_between(v0, v1).groupBy("_change_type").count().collect()
+
+            # the scans, the net changes and trickle's lookups read the table
+            # as the commits left it (merge-on-read over several generations).
+            # The first of the three scans or changes reads also generates
+            # and compiles its query's code; the median is past it.
+            out["scan"], _ = self._repeated("read.scan", lambda: _noop_scan(table.read()), tracer)
+            out["changes"], changes = self._repeated("read.changes", changes_by_type, tracer)
+            if not self.spec.lookups_compacted:
+                out["lookups"] = self._lookups(table, tracer)
             with tracer.span("lake.compact"):
-                m = _mark()
+                m = self._mark()
                 checks.op(table.compact)
-                out["compact"] = _since(m)
-            out["lookups"] = []
-            for key in self.lookup_keys:
-                with tracer.span("read.lookup"):
-                    m = _mark()
-                    rows = checks.op(lambda k=key: table.read(key_equals=k).collect())
-                    out["lookups"].append(_since(m))
-                self._check_lookup(key, rows)
+                out["compact"] = self._since(m)
+            if self.spec.lookups_compacted:
+                out["lookups"] = self._lookups(table, tracer)
         self._check_changes(changes)
         self._check_final(table)
         return out
 
+    def _repeated(self, name: str, fn, tracer) -> tuple[tuple[float, float], object]:
+        """Run the read `fn` `READ_REPEATS` times, each in a span `name`:
+        (median wall seconds, median CPU seconds), and the last result."""
+        times = []
+        for _ in range(READ_REPEATS):
+            with tracer.span(name):
+                m = self._mark()
+                result = self.checks.op(fn)
+                times.append(self._since(m))
+        return tuple(statistics.median(x) for x in zip(*times)), result
+
+    def _lookups(self, table, tracer) -> list[tuple[float, float]]:
+        for key in self.lookup_keys[:WARM_LOOKUPS]:  # untimed, as the reads above
+            table.read(key_equals=key).collect()
+        times = []
+        for key in self.lookup_keys:
+            with tracer.span("read.lookup"):
+                m = self._mark()
+                rows = self.checks.op(lambda k=key: table.read(key_equals=k).collect())
+                times.append(self._since(m))
+            self._check_lookup(key, rows)
+        return times
+
     def _engine(self, table, root: str, tracer, job_id: str) -> CdcEngine:
         store = StateStore(root + "_state")
-        if tracer.enabled:
+        if tracer and tracer.enabled:
             table, store = TracedTable(table, tracer), TracedStateStore(store, tracer)
         return CdcEngine(self.spark, table, store, job_id=job_id, merge_mode="delta")
 
@@ -348,19 +373,19 @@ class Workload:
         out["v0"] = table.version
         engine = self._engine(table, root, tracer, "bulk")
         path, n = self.changelog_path, self.spec.n_events
-        per_batch = -(-n // self.spec.apply_batches)
+        per_batch = -(-n // APPLY_BATCHES)
         commits, results = [], []
         with tracer.span("apply"):
-            start = _mark()
+            start = self._mark()
             changelog = self.spark.read.parquet(path)
             with tracer.span("planner.plan"):
                 plans = engine.plan(changelog, per_batch, source_path=path)
             for ranges in plans:
-                m = _mark()
+                m = self._mark()
                 with tracer.span("engine.batch"):
                     results.append(self.checks.op(engine.apply_batch, changelog, ranges))
-                commits.append(_since(m))
-            out["apply"] = _since(start)
+                commits.append(self._since(m))
+            out["apply"] = self._since(start)
         applied = sum(r.get("rows_read", 0) for r in results)
         self.checks.check(
             applied == n and not any(r.get("skipped") for r in results),
@@ -382,11 +407,11 @@ class Workload:
         ends, results = [], []
 
         def on_batch(result):
-            ends.append(_mark())
+            ends.append(self._mark())
             results.append(result)
 
         with tracer.span("apply"):
-            start = _mark()
+            start = self._mark()
             query = tail_changelog(
                 engine,
                 self.tail_path,
@@ -396,7 +421,7 @@ class Workload:
                 on_batch=on_batch,
             )
             self.checks.op(query.awaitTermination)
-            out["apply"] = _since(start)
+            out["apply"] = self._since(start)
         self.checks.attempted += len(results)  # one commit per micro-batch
         applied = sum(r.get("offsets_applied", 0) for r in results)
         self.checks.check(
@@ -458,13 +483,13 @@ class Workload:
         self.checks.check(not bad, f"{len(bad)} of {len(self.text_sample)} sampled texts differ")
 
 
-def series_us_per_row(html: list, repeats: int = 3) -> float:
+def series_us_per_row(html: list) -> float:
     """Median µs per row of `extract_text_series` over the html sample."""
     import pandas as pd
 
     series = pd.Series(html, dtype=object)
     times = []
-    for _ in range(repeats):
+    for _ in range(SERIES_REPEATS):
         t = time.perf_counter()
         extract_text_series(series)
         times.append(time.perf_counter() - t)

@@ -45,7 +45,8 @@ def round_layers(spans, stages, jobs, rnd: dict) -> tuple[dict, dict]:
     python_run = sum(st["run_s"] for st in python)
     rows_in = rnd["rows_in"]
     keys_out = rnd.get("keys_out") or sum(st["output_records"] for st in python)
-    compact = stages_under(named("lake.compact"))
+    compactions = named("lake.compact")
+    compact = stages_under(compactions)
 
     def shuffle_bytes_per_read(name):
         reads = named(name)
@@ -74,8 +75,12 @@ def round_layers(spans, stages, jobs, rnd: dict) -> tuple[dict, dict]:
         "extract.us_per_row": python_s * 1e6 / keys_out if keys_out else 0.0,
         "jvm.cpu_s": sum(st["cpu_s"] for st in round_stages),
         "jvm.gc_s": sum(st["gc_s"] for st in round_stages),
-        "lake.compact.exchanges": sum(1 for st in compact if st["shuffle_write_bytes"] > 0),
-        "lake.compact.shuffle_bytes": sum(st["shuffle_write_bytes"] for st in compact),
+        "lake.compact.exchanges": sum(1 for st in compact if st["shuffle_write_bytes"] > 0)
+        / max(1, len(compactions)),
+        "lake.compact.shuffle_bytes": sum(st["shuffle_write_bytes"] for st in compact)
+        / max(1, len(compactions)),
+        "read.scan_s": sum(_dur(s) for s in named("read.scan")),
+        "read.changes_s": sum(_dur(s) for s in named("read.changes")),
         "lake.read.scan_shuffle_bytes": shuffle_bytes_per_read("read.scan"),
         "lake.read.lookup_input_bytes": sum(
             st["input_bytes"] for st in stages_under(named("read.lookup"))

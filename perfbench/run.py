@@ -18,6 +18,7 @@ import hashlib
 import json
 import os
 import shutil
+import signal
 import statistics
 import subprocess
 import sys
@@ -37,10 +38,8 @@ END_TO_END = {
     "setup_s": "s",
     "apply_events_per_cpu_s": "1/s",
     "commit_cpu_p50_s": "s",
-    "scan_cpu_s": "s",
+    "read_cpu_s": "s",
     "lookup_cpu_p50_s": "s",
-    "lookup_cpu_p75_s": "s",
-    "changes_cpu_s": "s",
     "compact_cpu_s": "s",
 }
 PER_LAYER = {
@@ -68,6 +67,8 @@ PER_LAYER = {
     "jvm.jit_cpu_s": "s",
     "lake.compact.exchanges": "count",
     "lake.compact.shuffle_bytes": "bytes",
+    "read.scan_s": "s",
+    "read.changes_s": "s",
     "lake.read.scan_shuffle_bytes": "bytes",
     "lake.read.lookup_input_bytes": "bytes",
     "lake.changes.shuffle_bytes": "bytes",
@@ -151,8 +152,11 @@ def summarize(setups: list[tuple[float, float]], rounds: list[dict], which: int)
         "apply_events_per": statistics.median(r["events"] / r["apply"][which] for r in rounds),
         "commit_p50": statistics.median(x[which] for r in rounds for x in r["commits"]),
         "scan": statistics.median(r["scan"][which] for r in rounds),
+        "reads": statistics.median(
+            r["scan"][which] + r["changes"][which] + sum(x[which] for x in r["lookups"])
+            for r in rounds
+        ),
         "lookup_p50": percentile(lookups, 50),
-        "lookup_p75": percentile(lookups, 75),
         "changes": statistics.median(r["changes"][which] for r in rounds),
         "compact": statistics.median(r["compact"][which] for r in rounds),
     }
@@ -164,10 +168,8 @@ def end_to_end(setups, rounds) -> dict:
         "setup_s": cpu["setup"],
         "apply_events_per_cpu_s": cpu["apply_events_per"],
         "commit_cpu_p50_s": cpu["commit_p50"],
-        "scan_cpu_s": cpu["scan"],
+        "read_cpu_s": cpu["reads"],
         "lookup_cpu_p50_s": cpu["lookup_p50"],
-        "lookup_cpu_p75_s": cpu["lookup_p75"],
-        "changes_cpu_s": cpu["changes"],
         "compact_cpu_s": cpu["compact"],
     }
     return {k: {"value": v, "unit": END_TO_END[k]} for k, v in values.items()}
@@ -204,9 +206,18 @@ def main(argv=None) -> int:
     shutil.rmtree(work, ignore_errors=True)
     isolate(work)
     sys.path.insert(0, ROOT)
+    from perfbench import procs
+
+    procs.adopt_orphans()
+    # a SIGTERM unwinds through `finally`, which stops every process started
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
     try:
         return _run(args, work)
     finally:
+        procs.stop_spark()
+        killed = procs.end_all()
+        if killed:
+            log(f"killed processes that did not end: {killed}")
         shutil.rmtree(work, ignore_errors=True)
         with contextlib.suppress(OSError):  # other runs may still use it
             os.rmdir(os.path.dirname(work))
@@ -229,9 +240,10 @@ def _run(args, work: str) -> int:
 
     # Set-up = session start + warm-up. The session starts once (a second
     # SparkContext in one process breaks PySpark's accumulator channel); the
-    # warm-up — a small apply to a fresh table and a read — runs SETUPS
-    # times, and setup_s is the session's CPU seconds plus the median
-    # warm-up's. The traced run turns the event log on here, at session start.
+    # warm-up — a small round: an apply to a fresh table, then each read and
+    # the compaction the round makes — runs SETUPS times, and setup_s is the
+    # session's CPU seconds plus the median warm-up's. The traced run turns
+    # the event log on here, at session start.
     log_dir = os.path.join(work, "eventlog")
     extra = None
     if args.trace:
@@ -253,10 +265,9 @@ def _run(args, work: str) -> int:
     warm = []
     for _ in range(SETUPS):
         w, c = time.perf_counter(), cpu.read()[0]
-        warm_table = workload.warm()
+        workload.warm()
         warm.append((time.perf_counter() - w, cpu.read()[0] - c))
     setups = [(session[0] + w, session[1] + c) for w, c in warm]
-    warm_table.compact()  # untimed: the round's compaction runs compiled code
     prov = provenance(spark, spec, args.seed)
 
     # The traced run measures traced rounds only: the tracer's own time is

@@ -58,6 +58,19 @@ def _proc_stats() -> dict[int, tuple[int, list[str]]]:
     return out
 
 
+def tree_pids(procs: dict[int, tuple[int, list[str]]], root: int) -> list[int]:
+    """`root` and every pid below it, from `_proc_stats()`."""
+    kids: dict[int, list[int]] = {}
+    for pid, (ppid, _) in procs.items():
+        kids.setdefault(ppid, []).append(pid)
+    out, todo = [], [root]
+    while todo:
+        pid = todo.pop()
+        out.append(pid)
+        todo.extend(kids.get(pid, []))
+    return out
+
+
 def _process_cpu(pid: int, fields: list[str]) -> float:
     """CPU seconds of a process and of its reaped children. /proc counts in
     10 ms ticks; the process's own CPU clock counts in nanoseconds, which
@@ -85,16 +98,10 @@ class TreeCpu:
     def read(self) -> tuple[float, float]:
         """(CPU seconds of the tree, of which JIT compiler threads)."""
         procs = _proc_stats()
-        kids: dict[int, list[int]] = {}
-        for pid, (ppid, _) in procs.items():
-            kids.setdefault(ppid, []).append(pid)
-        total, todo = 0.0, [os.getpid()]
-        while todo:
-            pid = todo.pop()
-            if pid in procs:
-                total += _process_cpu(pid, procs[pid][1])
-                todo.extend(kids.get(pid, []))
-                self._read_jit(pid)
+        total = 0.0
+        for pid in tree_pids(procs, os.getpid()):
+            total += _process_cpu(pid, procs[pid][1])
+            self._read_jit(pid)
         return total, sum(self._jit.values())
 
     def _read_jit(self, pid: int) -> None:

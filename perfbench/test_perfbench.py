@@ -16,6 +16,7 @@ import pytest
 from perfbench import oracle
 from perfbench.eventlog import attribute, parse_events, read_event_log, task_skew
 from perfbench.layers import batch_coverage, round_layers
+from perfbench.procs import adopt_orphans, descendants, end_all
 from perfbench.stats import percentile
 from perfbench.tracing import Tracer, TracedTable, clip, self_times, union_length
 from perfbench.workloads import Checks, OpFailed
@@ -343,3 +344,19 @@ def test_tree_cpu_counts_this_process_and_a_child():
         child.wait()
     assert total1 - total0 >= 0.25  # the child's busy loop, read while it lives
     assert jit0 == jit1 == 0  # no JVM in this tree
+
+
+# ------------------------------------------------------------------ processes
+def test_end_all_waits_for_orphans_and_kills_stragglers():
+    import subprocess
+
+    assert adopt_orphans()
+    # each shell exits at once and orphans its sleep, which is re-parented here
+    subprocess.run(["sh", "-c", "sleep 0.3 &"], check=True)
+    assert descendants()
+    assert end_all(grace=10) == []  # ended on its own, and was waited for
+    assert not descendants()
+    subprocess.run(["sh", "-c", "sleep 30 &"], check=True)
+    t = time.monotonic()
+    assert len(end_all(grace=0.2)) == 1
+    assert not descendants() and time.monotonic() - t < 5

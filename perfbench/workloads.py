@@ -44,13 +44,15 @@ SCHEMA = T.StructType(
     ]
 )
 LOG_PARTITIONS = 32
+N_BUCKETS = 16
 APPLY_BATCHES = 2  # bulk: delta commits per round
-LOOKUPS = 40  # p75 is the highest percentile with ten samples beyond it
-READ_REPEATS = 3  # timed scans and net-changes reads per round; the median counts
+LOOKUPS = 20  # the median has ten samples beyond it
 TEXT_SAMPLE = 1000
 WARM_EVENTS = 2000  # one small apply per set-up
 WARM_BUCKETS = 4  # one reduce task per core: spawns every Python worker
-WARM_LOOKUPS = 5  # untimed, before the timed ones
+WARM_LOOKUPS = 2  # per warm-up
+# one compaction's CPU spread 0.39 over ten trickle runs, three's median 0.06-0.15
+COMPACTIONS = 3
 SERIES_SAMPLE = 10_000
 SERIES_REPEATS = 3
 
@@ -62,7 +64,6 @@ class Spec:
     preload_frac: float = 0.0  # trickle: share of each log partition preloaded
     tail_files: int = 0  # trickle: micro-batches per round
     max_generations: int | None = None  # trickle: the preloaded table's
-    n_buckets: int = 32
     # the point lookups read the compacted table (per-file key ranges)
     # rather than the generations the commits left (merge-on-read)
     lookups_compacted: bool = False
@@ -84,7 +85,6 @@ SPECS = {
         Spec(
             "trickle_ingest",
             n_events=16_000,
-            n_buckets=16,
             preload_frac=0.8,
             tail_files=3,
             max_generations=2,
@@ -242,7 +242,7 @@ class Workload:
             self.preload_root,
             SCHEMA,
             key="url",
-            n_buckets=self.spec.n_buckets,
+            n_buckets=N_BUCKETS,
             max_generations=self.spec.max_generations,
         )
         CdcEngine(self.spark, table, job_id="preload", merge_mode="delta").run(self.prefix_path)
@@ -269,13 +269,16 @@ class Workload:
         return wall - mark[0], cpu - mark[1]
 
     # ------------------------------------------------------------ warm-up
-    def warm(self) -> SnapshotTable:
-        """The set-up warm-up: apply about the first `WARM_EVENTS` offsets of
-        the changelog to a fresh table the way the round applies (bulk: plan
-        and `apply_batch`; trickle: one streaming micro-batch), and read it
-        back."""
+    def warm(self) -> None:
+        """The set-up warm-up: a small round. Apply about the first
+        `WARM_EVENTS` offsets of the changelog to a fresh table the way the
+        round applies (bulk: plan and `apply_batch`; trickle: one streaming
+        micro-batch), then make every read and the compaction the round
+        makes, in its order, once each, so that the round runs compiled code
+        from its first operation on."""
         root = self._fresh_dir("warm")
         table = SnapshotTable.create(self.spark, root, SCHEMA, key="url", n_buckets=WARM_BUCKETS)
+        v0 = table.version
         engine = self._engine(table, root, None, "warm")
         if self.spec.tail_files:
             tail_changelog(
@@ -285,8 +288,16 @@ class Workload:
             changelog = self.spark.read.parquet(self.changelog_path)
             first = engine.plan(changelog, WARM_EVENTS, source_path=self.changelog_path)[0]
             engine.apply_batch(changelog, first)
-        table.read().count()
-        return table
+        keys = [r[0] for r in table.read().select("url").limit(WARM_LOOKUPS).collect()]
+        _noop_scan(table.read())
+        table.changes_between(v0, table.version).groupBy("_change_type").count().collect()
+        if not self.spec.lookups_compacted:
+            for key in keys:
+                table.read(key_equals=key).collect()
+        table.compact()
+        if self.spec.lookups_compacted:
+            for key in keys:
+                table.read(key_equals=key).collect()
 
     def html_sample(self) -> list:
         """The first `SERIES_SAMPLE` non-null html payloads in log order."""
@@ -305,7 +316,6 @@ class Workload:
         CPU seconds of this process tree (driver, JVM, Python workers);
         returns those and, for the traced run, what the per-layer metrics
         need."""
-        checks = self.checks
         out: dict = {}
         with tracer.span("round") as round_span:
             out["span"] = round_span.get("id")
@@ -318,44 +328,47 @@ class Workload:
             def changes_by_type():
                 return table.changes_between(v0, v1).groupBy("_change_type").count().collect()
 
-            # the scans, the net changes and trickle's lookups read the table
-            # as the commits left it (merge-on-read over several generations).
-            # The first of the three scans or changes reads also generates
-            # and compiles its query's code; the median is past it.
-            out["scan"], _ = self._repeated("read.scan", lambda: _noop_scan(table.read()), tracer)
-            out["changes"], changes = self._repeated("read.changes", changes_by_type, tracer)
+            # the scan, the net changes and trickle's lookups read the table
+            # as the commits left it (merge-on-read over several generations)
+            out["scan"], _ = self._timed("read.scan", lambda: _noop_scan(table.read()), tracer)
+            out["changes"], changes = self._timed("read.changes", changes_by_type, tracer)
             if not self.spec.lookups_compacted:
                 out["lookups"] = self._lookups(table, tracer)
-            with tracer.span("lake.compact"):
-                m = self._mark()
-                checks.op(table.compact)
-                out["compact"] = self._since(m)
+            out["compact"], table = self._compactions(table, tracer)
             if self.spec.lookups_compacted:
                 out["lookups"] = self._lookups(table, tracer)
         self._check_changes(changes)
         self._check_final(table)
         return out
 
-    def _repeated(self, name: str, fn, tracer) -> tuple[tuple[float, float], object]:
-        """Run the read `fn` `READ_REPEATS` times, each in a span `name`:
-        (median wall seconds, median CPU seconds), and the last result."""
+    def _timed(self, name: str, fn, tracer) -> tuple[tuple[float, float], object]:
+        """Run the operation `fn` once in a span `name`: ((wall seconds, CPU
+        seconds), its result)."""
+        with tracer.span(name):
+            m = self._mark()
+            result = self.checks.op(fn)
+            return self._since(m), result
+
+    def _compactions(self, table, tracer) -> tuple[tuple[float, float], SnapshotTable]:
+        """Compact `COMPACTIONS` copies of the table, each copied outside the
+        timing: (median wall seconds, median CPU seconds), and the last
+        compacted copy."""
         times = []
-        for _ in range(READ_REPEATS):
-            with tracer.span(name):
-                m = self._mark()
-                result = self.checks.op(fn)
-                times.append(self._since(m))
-        return tuple(statistics.median(x) for x in zip(*times)), result
+        for _ in range(COMPACTIONS):
+            root = self._fresh_dir("compact")
+            shutil.copytree(table.root, root)
+            copy = SnapshotTable(self.spark, root)
+            t, _ = self._timed("lake.compact", copy.compact, tracer)
+            times.append(t)
+        return tuple(statistics.median(x) for x in zip(*times)), copy
 
     def _lookups(self, table, tracer) -> list[tuple[float, float]]:
-        for key in self.lookup_keys[:WARM_LOOKUPS]:  # untimed, as the reads above
-            table.read(key_equals=key).collect()
         times = []
         for key in self.lookup_keys:
-            with tracer.span("read.lookup"):
-                m = self._mark()
-                rows = self.checks.op(lambda k=key: table.read(key_equals=k).collect())
-                times.append(self._since(m))
+            t, rows = self._timed(
+                "read.lookup", lambda k=key: table.read(key_equals=k).collect(), tracer
+            )
+            times.append(t)
             self._check_lookup(key, rows)
         return times
 
@@ -368,7 +381,7 @@ class Workload:
     def _bulk_apply(self, tracer, out: dict) -> SnapshotTable:
         root = self._fresh_dir("bulk")
         table = SnapshotTable.create(
-            self.spark, root, SCHEMA, key="url", n_buckets=self.spec.n_buckets
+            self.spark, root, SCHEMA, key="url", n_buckets=N_BUCKETS
         )
         out["v0"] = table.version
         engine = self._engine(table, root, tracer, "bulk")
